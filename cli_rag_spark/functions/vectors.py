@@ -23,6 +23,9 @@ kernel (vector-db.h:6).
 
 from __future__ import annotations
 
+import math
+from collections.abc import Sequence
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -70,6 +73,52 @@ def cosine_similarity(a: Column, b: Column) -> Column:
 def cosine_distance(a: Column, b: Column) -> Column:
     """1 − cosine_similarity, the reference's metric (vector-db.c:217)."""
     return F.lit(1.0) - cosine_similarity(a, b)
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as one backtick-quoted SQL identifier (inner backticks
+    doubled), so any column name is safe inside SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _double_sql(x: float) -> str:
+    # repr is the shortest string that parses back to the same double
+    # (sign of zero, subnormals and 17-digit values included); SQL has
+    # no literal for NaN or the infinities, so those go through a cast
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def vector_sql(vec: Sequence[float]) -> str:
+    """SQL text of ``vec`` as an ``array<double>`` literal."""
+    return "array(" + ", ".join(_double_sql(x) for x in vec) + ")"
+
+
+def vector_literal(vec: Sequence[float]) -> Column:
+    """``vec`` as one ``array<double>`` literal column.
+
+    One parsed expression instead of one ``F.lit`` per element: the
+    Column-API form costs a few py4j round trips per component, which
+    at d = 64..768 dominates building a single-query plan."""
+    return F.expr(vector_sql(vec))
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def cosine_distance_sql(a: str, b: str) -> str:
+    """SQL-text twin of :func:`cosine_distance` over two SQL array
+    expressions; it analyzes to the same expression tree, so values are
+    bit-identical, but builds as one parsed expression."""
+    return f"1.0D - {_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
 
 
 def paired_cosine_distance(a: Column, b: Column) -> Column:

@@ -18,30 +18,24 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cli_rag_spark.functions.vectors import quote_ident
+
 CONTEXT_HEADER_FMT = "Context %d:\n"  # multirag.c:109 ("Context %li:\n")
 CONTEXT_SEP = " \n "  # multirag.c:80
-
-
-def context_piece(rank: Column, text: Column) -> Column:
-    """One hit's contribution: header + text (multirag.c:108-119)."""
-    return F.concat(F.format_string(CONTEXT_HEADER_FMT, rank), text)
 
 
 def _context_agg(rank_col: str, text_col: str, out_col: str) -> Column:
     """The shared aggregation column: collect (rank, text) structs,
     sort by rank (order-insensitive under any partitioning), render
-    each as a 'Context i:' piece, join with the reference separator."""
-    return F.array_join(
-        F.transform(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col(rank_col).alias("r"), F.col(text_col).alias("t"))
-                )
-            ),
-            lambda s: context_piece(s["r"], s["t"]),
-        ),
-        CONTEXT_SEP,
-    ).alias(out_col)
+    each as a 'Context i:' piece (multirag.c:108-119), join with the
+    reference separator. Built as one parsed SQL expression: a few py4j
+    round trips instead of one per Column-API node."""
+    return F.expr(
+        "array_join(transform(sort_array(collect_list(struct("
+        f"{quote_ident(rank_col)} AS r, {quote_ident(text_col)} AS t))), "
+        f"s -> concat(format_string('{CONTEXT_HEADER_FMT}', s.r), s.t)), "
+        f"'{CONTEXT_SEP}') AS {quote_ident(out_col)}"
+    )
 
 
 def assemble_context(

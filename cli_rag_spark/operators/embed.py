@@ -43,20 +43,42 @@ def mock_embedding_expr(text: Column, dim: int = DEFAULT_DIM) -> Column:
     """Deterministic pseudo-embedding as a pure SQL expression.
 
     dim_i = (md5_int60(i || '|' || text) % 10000) / 10000 - 0.5, then
-    L2-normalized. Identical formula runs in DuckDB (the oracle), so
-    chunk→embed→index→search pipelines are value-checkable without a
-    model server. JVM-side only — no Python in the plan.
+    L2-normalized and rounded to 9 digits. Identical formula runs in
+    DuckDB (the oracle), so chunk→embed→index→search pipelines are
+    value-checkable without a model server. JVM-side only — no Python
+    in the plan.
+
+    The expression has the same size at every ``dim``: the components
+    come from one ``transform(sequence(0, dim-1), i -> …)``, not from
+    ``dim`` unrolled Column-API terms. Unrolled, building the plan costs
+    a few py4j round trips per component (thousands per plan at d=64),
+    and any later reference to the unrolled array copies all ``dim``
+    md5 terms into the tree again. The raw vector is therefore bound
+    once, as the lambda variable ``v`` of a one-element ``transform``,
+    and its sum of squares is folded once by ``aggregate`` whose finish
+    lambda does the normalization; referencing the raw array inside the
+    per-element lambda instead would re-evaluate every md5 for every
+    element, ``dim``² md5s per row.
     """
-    raw = [
-        (
-            F.conv(F.substring(F.md5(F.concat(F.lit(f"{i}|"), text)), 1, 15), 16, 10)
-            .cast("bigint") % 10000
+    if dim < 1:
+        raise ValueError(f"dim must be positive, got {dim}")
+
+    def component(i: Column) -> Column:
+        h = F.md5(F.concat(i.cast("string"), F.lit("|"), text))
+        return (
+            F.conv(F.substring(h, 1, 15), 16, 10).cast("bigint") % 10000
         ).cast("double") / 10000.0 - 0.5
-        for i in range(dim)
-    ]
-    vec = F.array(*raw)
-    norm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x))
-    return F.transform(vec, lambda x: F.round(x / norm, 9))
+
+    def normalize(v: Column) -> Column:
+        return F.aggregate(
+            v,
+            F.lit(0.0),
+            lambda acc, x: acc + x * x,
+            lambda sq: F.transform(v, lambda x: F.round(x / F.sqrt(sq), 9)),
+        )
+
+    raw = F.transform(F.sequence(F.lit(0), F.lit(dim - 1)), component)
+    return F.transform(F.array(raw), normalize)[0]
 
 
 def mock_embedding_sql(text_expr: str, dim: int = DEFAULT_DIM) -> str:

@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cli_rag_spark.functions.vectors import vector_literal
+
 
 def gram_partials(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     """One row per Arrow batch: (n, sum_vec, gram) — the sufficient
@@ -138,13 +140,13 @@ def pca_project(df: DataFrame, vec_col: str, model: dict, out_col: str = "pc") -
     with zero shuffle and zero Python — the same fast-path argument as
     functions/vectors.py.
     """
-    mean = F.array(*[F.lit(float(m)) for m in model["mean"]])
+    mean = vector_literal(model["mean"])
     centered = F.zip_with(
         F.col(vec_col), mean, lambda x, m: x.cast("double") - m
     )
     projections = []
     for comp in model["components"]:
-        w = F.array(*[F.lit(float(c)) for c in comp])
+        w = vector_literal(comp)
         projections.append(
             F.aggregate(
                 F.zip_with(centered, w, lambda x, c: x * c),

@@ -23,9 +23,26 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 
-from cli_rag_spark.functions.vectors import cosine_distance
+from cli_rag_spark.functions.vectors import (
+    cosine_distance,
+    cosine_distance_sql,
+    quote_ident,
+    vector_sql,
+)
 
-METRICS = {"cosine": cosine_distance}
+# metric name -> SQL-text builder over (vector expr, query expr): the
+# whole distance is parsed as one expression, so building a query plan
+# costs a constant number of py4j round trips whatever the dimension
+METRICS = {"cosine": cosine_distance_sql}
+
+
+def _distance(
+    metric: str, vec_expr: str, query_vec: Sequence[float], round_digits: int | None
+) -> Column:
+    dist = METRICS[metric](vec_expr, vector_sql(query_vec))
+    if round_digits is not None:
+        dist = f"round({dist}, {int(round_digits)})"
+    return F.expr(dist)
 
 
 def topk(
@@ -47,11 +64,7 @@ def topk(
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    dist_fn = METRICS[metric]
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    dist = dist_fn(F.col(vector_col), q)
-    if round_digits is not None:
-        dist = F.round(dist, round_digits)
+    dist = _distance(metric, quote_ident(vector_col), query_vec, round_digits)
     return (
         df.withColumn(dist_col, dist)
         .orderBy(F.col(dist_col).asc(), F.col(id_col).asc())
@@ -69,8 +82,7 @@ def validate_topk(df: DataFrame, k: int) -> None:
 
 def topk_distance_column(query_vec: Sequence[float], vector_col: str = "embedding") -> Column:
     """Expose the distance expression for plan composition."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return cosine_distance(F.col(vector_col), q)
+    return _distance("cosine", quote_ident(vector_col), query_vec, None)
 
 
 def matryoshka_topk(
@@ -106,19 +118,16 @@ def matryoshka_topk(
         raise ValueError(f"coarse_dims must be in (0, {len(query_vec)}]")
     if shortlist < k:
         raise ValueError(f"shortlist {shortlist} must be >= k {k}")
-    q_coarse = F.array(*[F.lit(float(x)) for x in query_vec[:coarse_dims]])
-    coarse = cosine_distance(F.slice(F.col(vector_col), 1, coarse_dims), q_coarse)
-    if round_digits is not None:
-        coarse = F.round(coarse, round_digits)
+    vec = quote_ident(vector_col)
+    coarse = _distance(
+        "cosine", f"slice({vec}, 1, {int(coarse_dims)})", query_vec[:coarse_dims], round_digits
+    )
     short = (
         df.withColumn("coarse_dist", coarse)
         .orderBy(F.col("coarse_dist").asc(), F.col(id_col).asc())
         .limit(shortlist)
     )
-    q_full = F.array(*[F.lit(float(x)) for x in query_vec])
-    full = cosine_distance(F.col(vector_col), q_full)
-    if round_digits is not None:
-        full = F.round(full, round_digits)
+    full = _distance("cosine", vec, query_vec, round_digits)
     return (
         short.withColumn("dist", full)
         .orderBy(F.col("dist").asc(), F.col(id_col).asc())

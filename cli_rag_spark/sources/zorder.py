@@ -35,13 +35,15 @@ import operator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cli_rag_spark.functions.vectors import vector_literal
+
 BITS = 8  # bits per column -> 256 rank buckets each
 
 
 def _bucket(col: Column, cuts: list[float]) -> Column:
     """Rank bucket of ``col`` among the quantile cut points: the count
     of cut points <= value (NULLs -> bucket 0, sorting first)."""
-    cuts_arr = F.array(*[F.lit(float(c)) for c in cuts])
+    cuts_arr = vector_literal(cuts)
     n = F.size(
         F.filter(cuts_arr, lambda c: c <= col.cast("double"))
     )

@@ -8,7 +8,9 @@ Arms alternate A,B,A,B,... per query: arm A monkeypatches every
 import site of spread_small_input to identity (the pre-change plan),
 arm B leaves the shipped helper active. Interleaving cancels ambient
 drift; each run carries its own hypervisor-steal delta so throttled
-runs are visibly throttled. Quote steal-clean pairs only.
+runs are visibly throttled. Quote steal-clean pairs only: the output
+gives the best raw run per arm and the best steal-clean run
+("best_clean", null when an arm has none).
 """
 
 from __future__ import annotations
@@ -33,28 +35,23 @@ from cli_rag_spark.plans import queries_corpus  # noqa: E402
 # A/B'd with this harness and reverted — see each site's comment)
 SITES = [bootstrap, dedup, fuzzy, queries_corpus]
 
+# a run is steal-clean when hypervisor steal stayed at or below this
+# many CPU-seconds per wall second (the perfbench clean-op threshold)
+STEAL_CLEAN = 0.1
+
 
 def _steal() -> float:
     with open("/proc/stat") as f:
         return int(f.readline().split()[8]) / 100.0
 
 
-def _jvm_pid(spark) -> int | None:
-    try:
-        import subprocess
-
-        out = subprocess.run(
-            ["pgrep", "-f", "org.apache.spark.deploy.SparkSubmit"],
-            capture_output=True, text=True,
-        ).stdout.split()
-        return int(out[0]) if out else None
-    except Exception:
-        return None
+def _jvm_pid(spark) -> int:
+    """The pid of this session's own driver JVM (not the first
+    SparkSubmit on the box, which may belong to another session)."""
+    return int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
 
 
-def _proc_cpu(pid: int | None) -> float:
-    if pid is None:
-        return 0.0
+def _proc_cpu(pid: int) -> float:
     try:
         with open(f"/proc/{pid}/stat") as f:
             parts = f.read().rsplit(")", 1)[1].split()
@@ -109,7 +106,15 @@ def main() -> None:
                 spark.sparkContext.setJobDescription(f"ab:{name}:{key}:{i}")
                 arms[key].append(run(name))
         best = {k: min(v)[0] for k, v in arms.items()}
-        print(name, json.dumps({"best": best, "runs": arms}), flush=True)
+        best_clean = {
+            k: min((r[0] for r in v if r[2] <= STEAL_CLEAN * r[0]), default=None)
+            for k, v in arms.items()
+        }
+        print(
+            name,
+            json.dumps({"best": best, "best_clean": best_clean, "runs": arms}),
+            flush=True,
+        )
     set_arm(True)
     spark.stop()
 

@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from cli_rag_spark.functions.vectors import cosine_distance, quote_ident, vector_literal
 from cli_rag_spark.operators.context import assemble_context, rag_prompt
 from cli_rag_spark.operators.embed import embed, mock_embed_py, mock_embedding_expr
 from cli_rag_spark.operators.index import DimensionError, build_index, validate_dimension
@@ -41,10 +42,87 @@ class TestMockEmbedder:
         assert abs(sum(x * x for x in v0) - 1.0) < 1e-6  # unit norm
 
     def test_python_twin_matches_spark(self, spark):
-        df = spark.createDataFrame([("some text",)], ["chunk_text"])
-        spark_vec = embed(df, mode="mock", dim=8).collect()[0]["embedding"]
-        py_vec = mock_embed_py("some text", 8)
-        assert all(abs(a - b) < 1e-9 for a, b in zip(spark_vec, py_vec))
+        texts = ["some text", "", " ", "\t\n  ", "héllo wörld ✓ 日本語 😀", "a|b", "x" * 2000]
+        df = spark.createDataFrame([(t,) for t in texts] + [(None,)], "chunk_text string")
+        for dim in (1, 8, 64, 768):
+            got = [r["embedding"] for r in embed(df, mode="mock", dim=dim).collect()]
+            for text, vec in zip(texts, got):
+                assert vec == mock_embed_py(text, dim), (dim, text)
+            # NULL text: an array of dim NULLs, not a NULL array
+            assert got[-1] == [None] * dim
+
+    def test_expression_size_independent_of_dim(self, spark):
+        # an unrolled builder grows with dim (and re-evaluates every md5
+        # per element); the analyzed tree must be the same size at any dim
+        df = spark.createDataFrame([("t",)], "chunk_text string")
+
+        def n_nodes(dim):
+            plan = df.select(mock_embedding_expr(F.col("chunk_text"), dim))._jdf.queryExecution()
+            return len(plan.analyzed().expressions().head().treeString().splitlines())
+
+        assert n_nodes(8) == n_nodes(768)
+
+    def test_rejects_non_positive_dim(self):
+        with pytest.raises(ValueError, match="dim"):
+            mock_embedding_expr(F.col("chunk_text"), 0)
+
+
+class TestVectorSql:
+    def test_vector_literal_round_trips_every_double(self, spark):
+        import struct
+
+        vals = [
+            float("nan"), float("inf"), float("-inf"), 0.0, -0.0,
+            5e-324, -2.5e-310, 2.2250738585072014e-308,
+            1.7976931348623157e308, -1.7976931348623157e308,
+            0.1, 1 / 3, -2 / 3, 1e-05, 123456789.12345679, 0.30000000000000004,
+            3, -7,
+        ]
+        df = spark.range(1).select(vector_literal(vals).alias("v"))
+        assert df.schema["v"].dataType.simpleString() == "array<double>"
+        got = df.collect()[0]["v"]
+        assert [struct.pack("<d", x) for x in got] == [struct.pack("<d", float(x)) for x in vals]
+
+    def test_quote_ident(self):
+        assert quote_ident("embedding") == "`embedding`"
+        assert quote_ident("my `emb`") == "`my ``emb```"
+
+    def test_topk_dist_matches_column_api_with_ties(self, spark):
+        import random
+
+        from cli_rag_spark.operators.topk import matryoshka_topk, topk, topk_distance_column
+
+        rng = random.Random(11)
+        bases = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(5)]
+        # power-of-two multiples of a base vector have bit-identical
+        # cosine distances: every distance below is an exact tie
+        rows = [(i, [x * 2.0 ** (i % 3) for x in bases[i % 5]]) for i in range(40)]
+        rng.shuffle(rows)
+        vcol = "my `emb"
+        df = spark.createDataFrame(rows, f"vec_id int, {quote_ident(vcol)} array<double>").repartition(4)
+        q = [rng.uniform(-1, 1) for _ in range(8)]
+        ref_col = F.col(quote_ident(vcol))
+        ref = [
+            (r.vec_id, r.dist)
+            for r in df.withColumn("dist", F.round(cosine_distance(ref_col, vector_literal(q)), 6))
+            .orderBy("dist", "vec_id").limit(20).collect()
+        ]
+        got = [(r.vec_id, r.dist) for r in topk(df, q, 20, vector_col=vcol).collect()]
+        assert got == ref
+        assert len({d for _, d in got}) < len(got)  # the cut holds ties
+        col = df.select("vec_id", topk_distance_column(q, vcol).alias("d")).orderBy("vec_id").collect()
+        exact = df.select("vec_id", cosine_distance(ref_col, vector_literal(q)).alias("d"))
+        assert col == exact.orderBy("vec_id").collect()
+        # the MRL funnel at full width is the plain top-k
+        mrl = matryoshka_topk(df, q, 20, coarse_dims=8, shortlist=40, vector_col=vcol)
+        assert [(r.vec_id, r.dist) for r in mrl.collect()] == ref
+
+    def test_topk_unknown_metric_raises(self, spark):
+        from cli_rag_spark.operators.topk import topk
+
+        df = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id int, embedding array<double>")
+        with pytest.raises(KeyError):
+            topk(df, [1.0, 0.0], 1, metric="l2")
 
 
 class TestIndexBuild:
@@ -168,6 +246,34 @@ class TestContext:
         ).repartition(3)
         out = assemble_context(hits).collect()[0]["context"]
         assert out == "Context 1:\na \n Context 2:\nb \n Context 3:\nc"
+
+    def test_assemble_matches_column_api_on_shuffled_hits(self, spark):
+        import random
+
+        texts = ["it's", "back\\slash", "100% sure", "new\nline", "", "ü ✓", "`tick`"]
+        rows = list(enumerate(texts, start=1))
+        random.Random(3).shuffle(rows)
+        rank_col, text_col, out_col = "hit rank", "chunk `text`", "the context"
+        hits = spark.createDataFrame(
+            rows, f"{quote_ident(rank_col)} int, {quote_ident(text_col)} string"
+        ).repartition(4)
+        # the Column-API builder the SQL form replaced, as the reference
+        s = F.collect_list(
+            F.struct(F.col(quote_ident(rank_col)).alias("r"), F.col(quote_ident(text_col)).alias("t"))
+        )
+        ref = hits.select(
+            F.array_join(
+                F.transform(
+                    F.sort_array(s),
+                    lambda x: F.concat(F.format_string("Context %d:\n", x["r"]), x["t"]),
+                ),
+                " \n ",
+            ).alias("c")
+        ).collect()[0]["c"]
+        got = assemble_context(hits, rank_col=rank_col, text_col=text_col, out_col=out_col)
+        assert got.columns == [out_col]
+        assert got.collect()[0][out_col] == ref
+        assert ref == " \n ".join(f"Context {i}:\n{t}" for i, t in enumerate(texts, start=1))
 
     def test_rag_prompt_no_typo(self, spark):
         df = spark.createDataFrame([("ctx", "hi")], ["context", "q"])
